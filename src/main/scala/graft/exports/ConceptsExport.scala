@@ -251,7 +251,8 @@ object ConceptsExport {
     // otherwise (findCycleNodes unpersists on exit), so both fixpoints
     // were paying the JDBC-scan + join + distinct edge derivation per
     // pass — measured 5–10 s each at q470 scale vs ~1.5 s over a
-    // materialized frame (GraphFixpointProbe)
+    // materialized frame (perfbench's `graph.detect_cycles` and
+    // `graph.topo_order` spans time both passes)
     val selEdges = e.join(
       selected.select(qcol(cfg.key).as("src")), Seq("src"), "left_semi")
       .localCheckpoint()

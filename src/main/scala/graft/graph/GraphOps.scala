@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph algorithms over edge DataFrames — the Spark-first
@@ -8,18 +8,29 @@ import org.apache.spark.sql.functions._
   * (`concepts/src/concept_csv_export.py:407-530`): BFS descendant
   * closure (G1), cycle detection (G2), topological reordering (O4).
   *
-  * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`; all
-  * three algorithms are driver-orchestrated iterative DataFrame jobs.
-  * Each iteration `localCheckpoint()`s to cut lineage (SURVEY §7.4.4)
-  * — without it the plan doubles per iteration and Catalyst analysis
-  * time explodes. No GraphX/GraphFrames dependency. At cluster scale
-  * the per-iteration shuffle is hash-partitioned on the join key, and
-  * iteration count is bounded by graph diameter, not node count.
+  * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`; every
+  * iterative algorithm is a driver-orchestrated loop of DataFrame jobs,
+  * and every loop runs through ONE driver, [[fixpoint]], which owns:
+  *   - the eager checkpoint: each round's frame is
+  *     `localCheckpoint(eager = true)`ed (SURVEY §7.4.4) — lineage is
+  *     cut, so the plan does not double per round, and a round is ONE
+  *     action job;
+  *   - convergence: the loop's metric (changed, remaining or frontier
+  *     count, or an edge-set signature) is a `Dataset.observe`
+  *     aggregate riding that same checkpoint job — the observation is
+  *     delivered when the eager checkpoint returns, no job of its own;
+  *   - freeing: a superseded frame (the previous round; at exit, the
+  *     static inputs the rounds read) is freed only after its
+  *     successor is materialized;
+  *   - the round cap: a convergent loop that reaches its cap raises
+  *     [[FixpointCapException]] with the loop's name and round count;
+  *     a fixed-iteration loop runs exactly its rounds.
+  * No GraphX/GraphFrames dependency. At cluster scale the per-round
+  * shuffle is hash-partitioned on the join key, and the round count is
+  * bounded by graph diameter (O(log² n) for star-contraction CC), not
+  * node count.
   */
 object GraphOps {
-
-  private def checkpointed(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
 
   // r16 experiment, REJECTED by measurement: folding the eager
   // materialization into the convergence count via a LAZY
@@ -30,7 +41,9 @@ object GraphOps {
   // materializing action runs through shuffle-stage jobs, so every
   // subsequent iteration recomputed the full lineage — O(iters²) work.
   // The A/B probe freed the frame immediately and never re-read it,
-  // which is why it missed this. EAGER localCheckpoint is load-bearing.
+  // which is why it missed this. EAGER localCheckpoint is load-bearing
+  // (the observed convergence metric gets the one job per round while
+  // keeping it).
   //
   // r17 experiment, REJECTED by measurement: scoping AQE OFF to the
   // iteration loops (the r16 verdict's hypothesis for the ~0.4 s/iter
@@ -54,20 +67,72 @@ object GraphOps {
   // cluster scale per-round WORK dominates these driver-side
   // constants anyway. Leave the loops under default AQE.
 
-  /** Deterministically release a SUPERSEDED fixpoint iteration's
-    * checkpoint blocks (via [[org.apache.spark.sql.GraftPlanBridge
-    * .freeLocalCheckpoint]]). Without this, dead iterations pin
-    * BlockManager storage until a full GC fires the ContextCleaner's
-    * weak references — measured round 10: one 4 s pagerank left
-    * enough pinned debt to tax the next five bench queries 2–8 s
-    * each until the next scheduled `System.gc()`. Only ever called on
-    * frames that are provably dead: the successor was EAGERLY
-    * checkpointed (lineage cut, blocks materialized) before the free,
-    * so nothing can recompute through the freed frame. At cluster
-    * scale this is the difference between a k-iteration fixpoint
+  /** Round cap of the convergent loops that take no cap argument
+    * ([[bfsClosure]], [[findCycleNodes]]); [[topoDepth]]'s default. */
+  private val MaxRounds = 100
+
+  /** An eagerly checkpointed frame and the metrics observed on the job
+    * that wrote it (an empty row when none were asked for). */
+  private final case class Materialized(df: DataFrame, metrics: Row)
+
+  /** The eager checkpoint, with `metrics` (named aggregate columns)
+    * observed on the checkpoint job itself. */
+  private def materialize(df: DataFrame, metrics: Column*): Materialized =
+    if (metrics.isEmpty) Materialized(df.localCheckpoint(eager = true), Row.empty)
+    else {
+      val obs = Observation()
+      val cp = df.observe(obs, metrics.head, metrics.tail: _*)
+        .localCheckpoint(eager = true)
+      Materialized(cp, scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration.Inf))
+    }
+
+  /** Deterministically release a SUPERSEDED checkpoint's blocks (via
+    * [[org.apache.spark.sql.GraftPlanBridge.freeLocalCheckpoint]]).
+    * Without this, dead rounds pin BlockManager storage until a full
+    * GC fires the ContextCleaner's weak references — measured round
+    * 10: one 4 s pagerank left enough pinned debt to tax the next five
+    * bench queries 2–8 s each until the next scheduled `System.gc()`.
+    * Only [[fixpoint]] calls it, and only once the successor is eagerly
+    * materialized, so nothing can recompute through the freed frame.
+    * At cluster scale this is the difference between a k-round loop
     * holding 1 frame of executor storage and holding k. */
   private def free(df: DataFrame): Unit =
     org.apache.spark.sql.GraftPlanBridge.freeLocalCheckpoint(df)
+
+  /** The fixpoint driver (contract in the object doc): materializes
+    * `init`, then `step`s round by round. With `converged`, the loop
+    * stops once `converged(previous, next)` holds on the observed
+    * `metrics`, and raises [[FixpointCapException]] if `maxRounds`
+    * rounds pass first; without it, the loop runs exactly `maxRounds`
+    * rounds. `inputs` are checkpointed frames the rounds read, freed
+    * once the last round is materialized. Returns the last round. */
+  private def fixpoint(loop: String, init: DataFrame, maxRounds: Int,
+      metrics: Seq[Column] = Nil,
+      converged: Option[(Row, Row) => Boolean] = None,
+      inputs: Seq[DataFrame] = Nil)(
+      step: DataFrame => DataFrame): Materialized = {
+    var cur = materialize(init, metrics: _*)
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      val next = materialize(step(cur.df), metrics: _*)
+      free(cur.df)
+      done = converged.exists(_(cur.metrics, next.metrics))
+      cur = next
+      rounds += 1
+    }
+    inputs.foreach(free)
+    if (converged.isDefined && !done) {
+      free(cur.df)
+      throw new FixpointCapException(loop, rounds)
+    }
+    cur
+  }
+
+  /** Convergence when the observed count (metric 0) reaches zero. */
+  private val countIsZero: Option[(Row, Row) => Boolean] =
+    Some((_, next) => next.getLong(0) == 0L)
 
   /** Co-occurrence edge extraction from (basket, item) rows: all
     * unordered item pairs `(a < b)` sharing a basket — the q92/q238/
@@ -116,6 +181,11 @@ object GraphOps {
       .filter(col("a") < col("b"))
   }
 
+  /** Distinct endpoints of a `(src, dst)` edge frame as `node`. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+
   /** Longest-path depth layering ("topological rank").
     *
     * Given edges `(src, dst)` meaning "src references dst" (dst must
@@ -127,66 +197,48 @@ object GraphOps {
     * Precondition: acyclic (guard with [[findCycleNodes]]); maxIter
     * bounds runaway iteration on unexpected cycles.
     */
-  def topoDepth(edges: DataFrame, maxIter: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.toDF("src", "dst").cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var depth = checkpointed(nodes.withColumn("depth", lit(0)))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // candidate depth for each src = 1 + max depth of its dsts. The
-      // change flag rides in the checkpointed frame so convergence is a
-      // trivial filter-count on materialized rows — not a second
-      // old-vs-new join job per iteration.
+  def topoDepth(edges: DataFrame, maxIter: Int = MaxRounds): DataFrame = {
+    val e = materialize(edges.toDF("src", "dst")).df
+    // the change flag rides in each round's frame; its count is the
+    // round's observed metric
+    val depth = fixpoint("topoDepth",
+        endpoints(e).select(col("node"), lit(0).as("depth"),
+          lit(true).as("__chg")), maxIter,
+        metrics = Seq(count_if(col("__chg")).as("changed")),
+        converged = countIsZero, inputs = Seq(e)) { depth =>
+      // candidate depth for each src = 1 + max depth of its dsts
       val cand = e.join(depth, e("dst") === depth("node"))
         .groupBy(col("src").as("node2"))
         .agg((max(col("depth")) + 1).as("cand"))
-      val next = checkpointed(
-        depth.join(cand, depth("node") === cand("node2"), "left")
-          .select(col("node"),
-            greatest(col("depth"), coalesce(col("cand"), lit(0))).as("depth"),
-            (coalesce(col("cand"), lit(0)) > col("depth")).as("__chg")))
-      changed = next.filter(col("__chg")).count()
-      free(depth)
-      depth = next.drop("__chg")
-      iter += 1
+      depth.join(cand, depth("node") === cand("node2"), "left")
+        .select(col("node"),
+          greatest(col("depth"), coalesce(col("cand"), lit(0))).as("depth"),
+          (coalesce(col("cand"), lit(0)) > col("depth")).as("__chg"))
     }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"topoDepth did not converge in $maxIter iterations — graph is cyclic?")
-    e.unpersist()
-    depth
+    depth.df.select("node", "depth")
   }
 
   /** BFS reachability closure (G1, `concept_csv_export.py:407-438`):
     * all nodes reachable from `roots` following `src -> dst` edges,
-    * roots included. Frontier-join loop with visited-set anti-join;
-    * iterations = eccentricity of the root set.
+    * roots included. Each round's frame is the visited set with the
+    * nodes it newly reached flagged `__f` (the frontier): the frontier
+    * expands along the edges, and one full-outer join against the
+    * visited set flags what is new. Rounds = eccentricity of the root
+    * set, plus one.
     */
   def bfsClosure(edges: DataFrame, roots: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst").cache()
-    var visited = checkpointed(roots.toDF("node").distinct())
-    var frontier = visited
-    var frontierCount = frontier.count()
-    while (frontierCount > 0) {
-      val next = e.join(frontier, e("src") === frontier("node"))
+    val e = materialize(edges.toDF("src", "dst")).df
+    val visited = fixpoint("bfsClosure",
+        roots.toDF("node").distinct().withColumn("__f", lit(true)), MaxRounds,
+        metrics = Seq(count_if(col("__f")).as("frontier")),
+        converged = countIsZero, inputs = Seq(e)) { visited =>
+      val reached = e.join(visited.filter(col("__f")), e("src") === col("node"))
         .select(col("dst").as("node")).distinct()
-      val prevFrontier = frontier
-      frontier = checkpointed(next.join(visited, Seq("node"), "left_anti"))
-      // initial state aliases frontier = visited; never free the alias
-      if (prevFrontier ne visited) free(prevFrontier)
-      frontierCount = frontier.count()
-      if (frontierCount > 0) {
-        val prevVisited = visited
-        visited = checkpointed(visited.union(frontier).distinct())
-        free(prevVisited)
-      }
+      visited.select(col("node"), lit(true).as("__v"))
+        .join(reached, Seq("node"), "full_outer")
+        .select(col("node"), col("__v").isNull.as("__f"))
     }
-    if (frontier ne visited) free(frontier)
-    e.unpersist()
-    visited
+    visited.df.select("node")
   }
 
   /** Cycle reachability set (G2 core, `concept_csv_export.py:457-496`):
@@ -195,27 +247,22 @@ object GraphOps {
     * reach a cycle (a superset of cycle members; every remaining node
     * has an out-edge within the set). Empty result ⇔ acyclic.
     */
-  def findCycleNodes(edges: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst").cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var remaining = checkpointed(nodes)
-    var remainingCount = remaining.count()
-    var removed = 1L
-    while (removed > 0) {
+  def findCycleNodes(edges: DataFrame): DataFrame = peelToCycles(edges).df
+
+  /** [[findCycleNodes]] with its size: the last round's observed
+    * remaining count. */
+  private def peelToCycles(edges: DataFrame): Materialized = {
+    val e = materialize(edges.toDF("src", "dst")).df
+    fixpoint("findCycleNodes", endpoints(e), MaxRounds,
+        metrics = Seq(count(lit(1)).as("remaining")),
+        converged = Some((prev, next) => next.getLong(0) == prev.getLong(0)),
+        inputs = Seq(e)) { remaining =>
       // keep nodes that still have an edge into the remaining set
       val hasLiveOut = e.join(remaining.withColumnRenamed("node", "dst2"),
           e("dst") === col("dst2"))
         .select(col("src").as("node")).distinct()
-      val next = checkpointed(remaining.join(hasLiveOut, Seq("node"), "left_semi"))
-      val nextCount = next.count()
-      removed = remainingCount - nextCount
-      remainingCount = nextCount
-      free(remaining)
-      remaining = next
+      remaining.join(hasLiveOut, Seq("node"), "left_semi")
     }
-    e.unpersist()
-    remaining
   }
 
   /** Cycle guard with a human-readable witness (V2): raises
@@ -226,8 +273,9 @@ object GraphOps {
     * construction), never the full graph.
     */
   def detectCycles(edges: DataFrame, witnessLimit: Int = 100000): Unit = {
-    val cyc = findCycleNodes(edges)
-    val n = cyc.count()
+    val peeled = peelToCycles(edges)
+    val cyc = peeled.df
+    val n = peeled.metrics.getLong(0)
     if (n == 0) return
     if (n > witnessLimit)
       throw new CycleException(s"graph contains cycles over $n nodes (witness suppressed)")
@@ -258,48 +306,9 @@ object GraphOps {
     throw new CycleException(s"Cycle detected: $witness")
   }
 
-  /** Connected components over an UNDIRECTED edge set (the edges are
-    * symmetrized internally): returns `(node, comp)` where comp is the
-    * minimum node id reachable from `node`. Min-label propagation —
-    * each iteration takes the min of a node's label and its neighbors'
-    * labels — converges in O(component diameter) iterations with a
-    * checkpoint per step. The dedup use case: near-dup PAIRS →
-    * duplicate GROUPS with a canonical representative (keep min,
-    * drop the rest). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e0 = edges.toDF("a", "b")
-    val e = e0.union(e0.select(col("b"), col("a"))).distinct().cache()
-    val nodes = e.select(col("a").as("node")).distinct()
-    var labels = checkpointed(nodes.withColumn("comp", col("node")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // change flag computed in-flight (see topoDepth): one job per
-      // iteration, convergence read off the checkpoint
-      val neighborMin = e.join(labels, e("b") === labels("node"))
-        .groupBy(col("a").as("node2"))
-        .agg(min(col("comp")).as("nmin"))
-      val next = checkpointed(
-        labels.join(neighborMin, labels("node") === col("node2"), "left")
-          .select(col("node"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-            (coalesce(col("nmin"), col("comp")) < col("comp")).as("__chg")))
-      changed = next.filter(col("__chg")).count()
-      free(labels)
-      labels = next.drop("__chg")
-      iter += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations")
-    e.unpersist()
-    labels
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — the 100 TB-scale alternative to
-    * [[connectedComponents]]'s min-label propagation. Min-propagation
+  /** Connected components over an UNDIRECTED edge set by alternating
+    * large-star / small-star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14). Label propagation
     * needs O(diameter) rounds, which on path-shaped similarity chains
     * (dedup graphs routinely contain them) means thousands of shuffles;
     * star contraction converges in O(log² n) rounds REGARDLESS of
@@ -311,30 +320,25 @@ object GraphOps {
     *     (plus u) re-attaches to the minimum parent — stars flatten.
     *
     * Fixpoint when the edge set stops changing (signature = count +
-    * order-free checksum of canonical edges, one tiny agg per round —
-    * the in-flight-convergence-flag discipline of the other fixpoints
-    * here). Returns `(node, comp)` with comp = the component's minimum
-    * node id, same contract as [[connectedComponents]] — nodes that
-    * appear in `edges` only; callers union isolated nodes themselves.
-    * Self-loops are dropped; the input need not be symmetrized. */
+    * order-free checksum of canonical edges, observed on each round's
+    * checkpoint). Returns `(node, comp)` with comp = the component's
+    * minimum node id — the dedup use case: near-dup PAIRS → duplicate
+    * GROUPS with a canonical representative (keep min, drop the rest).
+    * Nodes that appear in `edges` only; callers union isolated nodes
+    * themselves. Self-loops are dropped; the input need not be
+    * symmetrized. */
   def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val e0 = edges.toDF("u", "v").filter(col("u") =!= col("v"))
     // canonical undirected form (min, max): one row per edge
-    var e = checkpointed(
-      e0.select(least(col("u"), col("v")).as("u"),
-          greatest(col("u"), col("v")).as("v"))
-        .distinct())
-    def signature(df: DataFrame): (Long, Long) = {
-      // order-free, overflow-free checksum: XOR of per-edge hashes
-      // (edges are distinct, so no cancellation pairs exist)
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var sig = signature(e)
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
+    val canon = e0.select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .distinct()
+    val stars = fixpoint("connectedComponentsStar", canon, maxRounds,
+        // order-free, overflow-free checksum: XOR of per-edge hashes
+        // (edges are distinct, so no cancellation pairs exist)
+        metrics = Seq(count(lit(1)).as("n"),
+          bit_xor(xxhash64(col("u"), col("v"))).as("x")),
+        converged = Some(_ == _)) { e =>
       // large-star: group the SYMMETRIZED adjacency by u; neighbors
       // larger than u re-attach to min(N(u) ∪ u)
       val sym = e.select(col("u"), col("v"))
@@ -347,11 +351,9 @@ object GraphOps {
         .select(least(col("u"), col("v")).as("u"),
           greatest(col("u"), col("v")).as("v"))
         .distinct()
-      val afterLarge = checkpointed(large)
-      free(e)
       // small-star: orient child = max endpoint; child and all its
       // parents re-attach to the minimum parent
-      val small = afterLarge
+      large
         .select(col("v").as("child"), col("u").as("parent"))
         .groupBy("child")
         .agg(min(col("parent")).as("m"),
@@ -361,22 +363,28 @@ object GraphOps {
         .filter(col("n") =!= col("m"))
         .select(col("m").as("u"), col("n").as("v"))
         .distinct()
-      val next = checkpointed(small)
-      free(afterLarge)
-      val nextSig = signature(next)
-      stable = nextSig == sig
-      sig = nextSig
-      e = next
-      round += 1
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds rounds")
+    }.df
     // at the fixpoint the edge set is a star forest: (root, child)
-    e.select(col("v").as("node"), col("u").as("comp"))
-      .union(e.select(col("u").as("node"), col("u").as("comp")))
+    stars.select(col("v").as("node"), col("u").as("comp"))
+      .union(stars.select(col("u").as("node"), col("u").as("comp")))
       .distinct()
   }
+
+  private def round6(c: Column): Column =
+    graft.functions.MysqlFunctions.oracleRound(c, 6)
+
+  /** Static per-edge out-degree: `(src, dst, __od)` materialized once,
+    * HASH-PARTITIONED ON src — the rank propagation's join key — so
+    * each round shuffles only the node-sized rank frame to meet it,
+    * never the edge set (localCheckpoint preserves the partitioning).
+    * NB: rounds sum `pr / __od` (integer divisor) — NOT a precomputed
+    * 1/od weight — so every division is the exact operation the SQL
+    * oracle performs (a premultiplied reciprocal differs by ulps,
+    * which 6-dp re-pinning need not absorb at a rounding boundary). */
+  private def outDegreeEdges(e: DataFrame): DataFrame =
+    materialize(
+      e.join(e.groupBy("src").agg(count(lit(1)).as("__od")), "src")
+        .repartition(col("src"))).df
 
   /** Fixed-iteration PageRank over a DIRECTED edge set — the classic
     * link-quality signal of web-corpus curation (host/URL ranking as a
@@ -393,14 +401,12 @@ object GraphOps {
     * uniformly each step (`+ d·m_dangling/N`), keeping total mass at 1.
     *
     * Scale shape: out-degree is static, so it is folded into the edge
-    * set ONCE up front (each edge row carries its source's degree —
-    * r4 re-derived it from the edge cache every iteration, an extra
-    * groupBy+join per step). Each iteration is then one
-    * (edges ⋈ ranks) hash join + a map-side-combined per-dst sum + a
-    * left join back to the node set, checkpointed per step like every
-    * fixpoint here. The dangling correction, when on, adds a 1-row
-    * aggregate broadcast back per step. N is the one driver-side
-    * scalar (a count — what any PageRank reduce collects).
+    * set ONCE up front ([[outDegreeEdges]]). Each
+    * iteration is then one (edges ⋈ ranks) hash join + a
+    * map-side-combined per-dst sum + a left join back to the node set.
+    * The dangling correction, when on, adds a 1-row aggregate broadcast
+    * back per step. N is the one driver-side scalar, observed on the
+    * node set's checkpoint.
     */
   def pageRank(edges: DataFrame, iters: Int,
       damping: Double = 0.85,
@@ -412,60 +418,37 @@ object GraphOps {
     // contributions, so only assert what the construction guarantees
     val e0 = edges.toDF("src", "dst")
     val e = (if (assumeDistinct) e0 else e0.distinct()).cache()
-    val nodes = checkpointed(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-    // static per-edge degree: (src, dst, __od) materialized once,
-    // HASH-PARTITIONED ON src — the iteration join's key — so each
-    // round shuffles only the node-sized rank frame to meet it, never
-    // the edge set (localCheckpoint preserves the partitioning).
-    // NB: the per-iteration sum stays `pr / __od` (integer divisor) —
-    // NOT a precomputed 1/od weight — so every division is the exact
-    // operation the SQL oracle performs (a premultiplied reciprocal
-    // differs by ulps, which 6-dp re-pinning need not absorb at a
-    // rounding boundary).
-    val ew = checkpointed(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("__od")), "src")
-        .repartition(col("src")))
+    val counted = materialize(endpoints(e), count(lit(1)).as("n"))
+    val nodes = counted.df
+    val n = counted.metrics.getLong(0)
+    val ew = outDegreeEdges(e)
     val srcNodes =
       if (redistributeDangling)
-        checkpointed(e.select(col("src").as("node")).distinct())
-      else null
+        Some(materialize(e.select(col("src").as("node")).distinct()).df)
+      else None
     e.unpersist()
-    val n = nodes.count()
-    val round6 = (c: Column) =>
-      graft.functions.MysqlFunctions.oracleRound(c, 6)
-    var pr = checkpointed(nodes.withColumn("pr", round6(lit(1.0) / n)))
-    for (_ <- 0 until iters) {
+    fixpoint("pageRank", nodes.withColumn("pr", round6(lit(1.0) / n)), iters,
+        inputs = Seq(nodes, ew) ++ srcNodes) { pr =>
       val contrib = ew.join(pr, ew("src") === pr("node"))
         .groupBy(col("dst").as("__node"))
         .agg(sum(col("pr") / col("__od")).as("__m"))
       val joined = nodes.join(contrib, nodes("node") === col("__node"), "left")
-      val next =
-        if (redistributeDangling) {
+      srcNodes match {
+        case Some(srcs) =>
           // mass parked on out-edge-free nodes this step: one anti-join
           // + 1-row aggregate, broadcast onto every node row
-          val dangling = pr.join(srcNodes, Seq("node"), "left_anti")
+          val dangling = pr.join(srcs, Seq("node"), "left_anti")
             .agg(coalesce(sum("pr"), lit(0.0)).as("__dm"))
           joined.crossJoin(broadcast(dangling))
             .select(col("node"),
               round6(lit((1.0 - damping) / n) + lit(damping) *
                 (coalesce(col("__m"), lit(0.0)) + col("__dm") / n)).as("pr"))
-        } else
+        case None =>
           joined.select(col("node"),
             round6(lit((1.0 - damping) / n) +
               lit(damping) * coalesce(col("__m"), lit(0.0))).as("pr"))
-      val prev = pr
-      pr = checkpointed(next)
-      free(prev)
-    }
-    // pr's lineage is cut by its own checkpoint, so the edge-sized
-    // degree frame (the big block set of this whole query) and the
-    // node frames are dead the moment the loop exits — release them
-    // here instead of pinning edge-scale storage until the next GC
-    free(nodes); free(ew)
-    if (srcNodes != null) free(srcNodes)
-    pr
+      }
+    }.df
   }
 
   /** PERSONALIZED PageRank (random walk with restart): like
@@ -479,48 +462,40 @@ object GraphOps {
     * as 1−damping — so the oracle can use the same decimal literal
     * (1−0.85 in binary doubles is not the double 0.15; the 6-dp
     * re-pin would usually absorb that, but not at a rounding
-    * boundary). Same shuffle shape, checkpoint discipline, and
-    * rounding contract as [[pageRank]]; unlike it, mass NOT reachable
-    * from the seeds stays exactly 0. */
+    * boundary). Same shuffle shape and rounding contract as
+    * [[pageRank]]; unlike it, mass NOT reachable from the seeds stays
+    * exactly 0. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int, damping: Double = 0.85, restart: Double = 0.15,
       assumeDistinct: Boolean = false): DataFrame = {
-    val round6 = (c: Column) =>
-      graft.functions.MysqlFunctions.oracleRound(c, 6)
     val e0 = edges.toDF("src", "dst")
     val e = (if (assumeDistinct) e0 else e0.distinct()).cache()
-    val nodes = checkpointed(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-    val ew = checkpointed(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("__od")), "src")
-        .repartition(col("src")))
+    val nodes = materialize(endpoints(e)).df
+    val ew = outDegreeEdges(e)
     e.unpersist()
-    val sd = seeds.toDF("node").distinct()
-    val nS = sd.count()
+    val counted = materialize(seeds.toDF("node").distinct(), count(lit(1)).as("n"))
+    val sd = counted.df
+    val nS = counted.metrics.getLong(0)
     require(nS > 0, "personalizedPageRank needs a non-empty seed set")
-    val seeded = checkpointed(
+    // joined from the node set's checkpoint, not its plan: the rounds'
+    // join on the seeded frame measured ~0.4 s/round slower otherwise
+    // (q418 at sf0.1, 4 cores)
+    val seeded = materialize(
       nodes.join(sd.withColumn("__s", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__s"), lit(false)).as("__seed")))
-    var pr = checkpointed(seeded
-      .select(col("node"),
-        round6(when(col("__seed"), lit(1.0) / nS).otherwise(lit(0.0)))
-          .as("pr")))
-    for (_ <- 0 until iters) {
+        .select(col("node"), coalesce(col("__s"), lit(false)).as("__seed"))).df
+    val init = seeded.select(col("node"),
+      round6(when(col("__seed"), lit(1.0) / nS).otherwise(lit(0.0))).as("pr"))
+    fixpoint("personalizedPageRank", init, iters,
+        inputs = Seq(nodes, ew, sd, seeded)) { pr =>
       val contrib = ew.join(pr, ew("src") === pr("node"))
         .groupBy(col("dst").as("__node"))
         .agg(sum(col("pr") / col("__od")).as("__m"))
-      val prev = pr
-      pr = checkpointed(
-        seeded.join(contrib, seeded("node") === col("__node"), "left")
-          .select(seeded("node"),
-            round6(when(col("__seed"), lit(restart) / nS)
-              .otherwise(lit(0.0)) +
-              lit(damping) * coalesce(col("__m"), lit(0.0))).as("pr")))
-      free(prev)
-    }
-    free(nodes); free(ew); free(seeded)
-    pr
+      seeded.join(contrib, seeded("node") === col("__node"), "left")
+        .select(seeded("node"),
+          round6(when(col("__seed"), lit(restart) / nS)
+            .otherwise(lit(0.0)) +
+            lit(damping) * coalesce(col("__m"), lit(0.0))).as("pr"))
+    }.df
   }
 
   /** Synchronous label propagation (fixed iterations) — the cheap
@@ -537,17 +512,13 @@ object GraphOps {
     *
     * Scale shape per iteration: one (edges ⋈ labels) hash join, a
     * map-side-combined (node, label) count, one per-node top-1 window,
-    * and a node-sized left join back — checkpointed per step like
-    * every fixpoint here. */
+    * and a node-sized left join back. */
   def labelPropagation(edges: DataFrame, iters: Int,
       assumeDistinct: Boolean = false): DataFrame = {
     val e0 = edges.toDF("src", "dst")
-    val e = (if (assumeDistinct) e0 else e0.distinct()).cache()
-    val nodes = checkpointed(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-    var labels = checkpointed(nodes.withColumn("label", col("node")))
-    for (_ <- 0 until iters) {
+    val e = materialize(if (assumeDistinct) e0 else e0.distinct()).df
+    fixpoint("labelPropagation", endpoints(e).withColumn("label", col("node")),
+        iters, inputs = Seq(e)) { labels =>
       val counts = e.join(labels, e("dst") === labels("node"))
         .groupBy(e("src").as("n"), col("label"))
         .agg(count(lit(1)).as("c"))
@@ -557,16 +528,48 @@ object GraphOps {
             .orderBy(col("c").desc, col("label"))))
         .filter(col("__rn") === 1)
         .select(col("n"), col("label").as("__new"))
-      val prev = labels
-      labels = checkpointed(
-        labels.join(top, labels("node") === col("n"), "left")
-          .select(col("node"),
-            coalesce(col("__new"), col("label")).as("label")))
-      free(prev)
-    }
-    e.unpersist()
-    free(nodes)
-    labels
+      labels.join(top, labels("node") === col("n"), "left")
+        .select(col("node"),
+          coalesce(col("__new"), col("label")).as("label"))
+    }.df
+  }
+
+  /** Canonical undirected form of an `(a, b)` edge frame: self-loops
+    * dropped, one `(a < b)` row per edge. */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.toDF("a", "b").filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b")).distinct()
+
+  /** Degree-orient a CANONICAL (a < b, distinct) undirected edge set:
+    * `(u, v)` for each edge, from its lower-(degree, id) endpoint to
+    * the higher one — exactly one direction per edge. */
+  private def oriented(canon: DataFrame): DataFrame = {
+    val und = canon.union(canon.select(col("b"), col("a")))
+    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
+    und
+      .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
+      .filter(col("__da") < col("__db") ||
+        (col("__da") === col("__db") && col("a") < col("b")))
+      .select(col("a").as("u"), col("b").as("v"))
+  }
+
+  /** All triangles of a CANONICAL (a < b, distinct) undirected edge
+    * set, each exactly once, as `(u, v1, v2)` triples — the
+    * degree-ordered wedge enumeration [[triangleCounts]] documents
+    * (u is the triangle's lowest-(deg, id) corner; v1 < v2). The
+    * orientation is planned inline: over a checkpointed `canon` it is
+    * cheaper than a checkpoint of its own (one job fewer). */
+  private def triangleTriples(canon: DataFrame): DataFrame = {
+    val orient = oriented(canon)
+    val wedges = orient.select(col("u"), col("v").as("v1"))
+      .join(orient.select(col("u"), col("v").as("v2")), Seq("u"))
+      .filter(col("v1") < col("v2"))
+    // v1 < v2 already, so (v1, v2) IS the canonical form — plain
+    // equi-join keys, no least/greatest re-derivation
+    wedges.join(canon,
+      col("v1") === col("a") && col("v2") === col("b"), "left_semi")
   }
 
   /** Per-node triangle counts over an UNDIRECTED edge set — the local
@@ -581,50 +584,10 @@ object GraphOps {
     * canonical edge set. Every triangle is found exactly once (at its
     * lowest-ordered vertex), then credited to all three corners.
     * Returns (node, n_triangles), nodes with ≥ 1 triangle. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val e0 = edges.toDF("a", "b").filter(col("a") =!= col("b"))
-    // canonical undirected set (a < b), and full degrees off it
-    val canon = checkpointed(
-      e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct())
-    triangleTriples(canon)
+  def triangleCounts(edges: DataFrame): DataFrame =
+    triangleTriples(materialize(canonical(edges)).df)
       .select(explode(array(col("u"), col("v1"), col("v2"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** All triangles of a CANONICAL (a < b, distinct) undirected edge
-    * set, each exactly once, as `(u, v1, v2)` triples — the
-    * degree-ordered wedge enumeration [[triangleCounts]] documents
-    * (u is the triangle's lowest-(deg, id) corner; v1 < v2). */
-  private def triangleTriples(canon: DataFrame): DataFrame =
-    triangleTriplesWithHandle(canon)._1
-
-  /** [[triangleTriples]] plus the round's `orient` checkpoint handle,
-    * for loop callers ([[kTrussPeel]]) that can [[free]] it once the
-    * consuming round is materialized — per-round orient frames
-    * otherwise pin edge-sized storage until GC (the round-10 lesson;
-    * r16). One-shot callers use [[triangleTriples]] and let the
-    * ContextCleaner reap the single frame. */
-  private def triangleTriplesWithHandle(
-      canon: DataFrame): (DataFrame, DataFrame) = {
-    val und = canon.union(canon.select(col("b"), col("a")))
-    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-    // orient by (deg, id): u -> v iff (deg_u, u) < (deg_v, v)
-    val orient = checkpointed(und
-      .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
-      .filter(col("__da") < col("__db") ||
-        (col("__da") === col("__db") && col("a") < col("b")))
-      .select(col("a").as("u"), col("b").as("v")))
-    val wedges = orient.select(col("u"), col("v").as("v1"))
-      .join(orient.select(col("u"), col("v").as("v2")), Seq("u"))
-      .filter(col("v1") < col("v2"))
-    // v1 < v2 already, so (v1, v2) IS the canonical form — plain
-    // equi-join keys, no least/greatest re-derivation
-    (wedges.join(canon,
-      col("v1") === col("a") && col("v2") === col("b"), "left_semi"),
-      orient)
-  }
 
   /** k-TRUSS peel (Cohen 2008): repeatedly drop edges supported by
     * fewer than k−2 triangles — the EDGE-grain densification beside
@@ -640,35 +603,21 @@ object GraphOps {
     *
     * Scale shape per round: one degree-ordered triangle enumeration
     * (out-wedge fanout bounded by O(√|E|)) + an explode-to-3 edge
-    * credit + one keyed count — all hash-partitioned on the edge key;
-    * rounds are checkpointed and superseded frames freed. */
+    * credit + one keyed count — all hash-partitioned on the edge key. */
   def kTrussPeel(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e0 = edges.toDF("a", "b").filter(col("a") =!= col("b"))
-    var canon = checkpointed(
-      e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct())
-    def support(c: DataFrame): (DataFrame, DataFrame) = {
-      val (tri, orient) = triangleTriplesWithHandle(c)
-      (tri
+    def support(canon: DataFrame): DataFrame =
+      triangleTriples(canon)
         .select(explode(array(
           struct(col("u").as("x"), col("v1").as("y")),
           struct(col("u").as("x"), col("v2").as("y")),
           struct(col("v1").as("x"), col("v2").as("y")))).as("e"))
         .select(least(col("e.x"), col("e.y")).as("a"),
           greatest(col("e.x"), col("e.y")).as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("sup")), orient)
-    }
-    for (_ <- 0 until iters) {
-      val prev = canon
-      val (sup, orient) = support(canon)
-      canon = checkpointed(
-        canon.join(sup.filter(col("sup") >= k - 2),
-          Seq("a", "b"), "left_semi"))
-      // the round's orient checkpoint is dead once canon materialized
-      free(orient)
-      free(prev)
-    }
-    canon.join(support(canon)._1, Seq("a", "b"), "left")
+        .groupBy("a", "b").agg(count(lit(1)).as("sup"))
+    val canon = fixpoint("kTrussPeel", canonical(edges), iters) { c =>
+      c.join(support(c).filter(col("sup") >= k - 2), Seq("a", "b"), "left_semi")
+    }.df
+    canon.join(support(canon), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("sup"), lit(0L)).as("support"))
   }
@@ -700,21 +649,16 @@ object GraphOps {
     * once no round removes a node (fixpoint spec-checked).
     *
     * Scale shape per round: one map-side-combined degree count + two
-    * semi joins (src-alive, dst-alive), checkpointed per step like
-    * every fixpoint here. */
+    * semi joins (src-alive, dst-alive). */
   def kCorePeel(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    var e = checkpointed(edges.toDF("src", "dst"))
-    for (_ <- 0 until iters) {
+    val e = fixpoint("kCorePeel", edges.toDF("src", "dst"), iters) { e =>
       val alive = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("__n"))
-      val prev = e
-      e = checkpointed(
-        e.join(alive.withColumnRenamed("__n", "src"), Seq("src"), "left_semi")
-          .join(alive.withColumnRenamed("__n", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst"))
-      free(prev)
-    }
+      e.join(alive.withColumnRenamed("__n", "src"), Seq("src"), "left_semi")
+        .join(alive.withColumnRenamed("__n", "dst"), Seq("dst"), "left_semi")
+        .select("src", "dst")
+    }.df
     e.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
   }
@@ -734,45 +678,40 @@ object GraphOps {
     * total bipartite-style edge frame produce no nulls).
     *
     * Scale shape: the edge set is checkpointed hash-partitioned once;
-    * each round shuffles only the node-sized score frame to meet it
-    * (max is a 1-row broadcast), and superseded rounds free their
-    * checkpoint blocks ([[free]]) like every fixpoint here. */
+    * each round's frame holds both score sets in the output shape, and
+    * a round shuffles only the node-sized scores to meet the edges
+    * (max is a 1-row broadcast). */
   def hits(edges: DataFrame, iters: Int,
       assumeDistinct: Boolean = false): DataFrame = {
     // authorities only exist after a first hub→auth pass; iters == 0
-    // would leave `auth` null and NPE in the final union, unlike the
-    // other fixpoints here which degrade to their init frame
+    // would return hubs alone, unlike the other fixpoints here which
+    // degrade to their init frame
     require(iters >= 1, s"hits needs iters >= 1, got $iters")
-    val round6 = (c: Column) =>
-      graft.functions.MysqlFunctions.oracleRound(c, 6)
     val e0 = edges.toDF("src", "dst")
-    val e = checkpointed(
-      (if (assumeDistinct) e0 else e0.distinct()).repartition(col("src")))
-    var hub = checkpointed(
-      e.select(col("src").as("node")).distinct().withColumn("h", lit(1.0)))
-    var auth: DataFrame = null
-    for (_ <- 0 until iters) {
-      val araw = e.join(hub, e("src") === hub("node"))
-        .groupBy(col("dst").as("anode")).agg(sum(col("h")).as("m"))
-      val amax = araw.agg(max(col("m")).as("mx"))
-      val nextAuth = checkpointed(araw.crossJoin(broadcast(amax))
-        .select(col("anode").as("node"),
-          round6(col("m") / col("mx")).as("a")))
-      if (auth != null) free(auth)
-      auth = nextAuth
-      val hraw = e.join(auth, e("dst") === auth("node"))
-        .groupBy(col("src").as("hnode")).agg(sum(col("a")).as("m"))
-      val hmax = hraw.agg(max(col("m")).as("mx"))
-      val nextHub = checkpointed(hraw.crossJoin(broadcast(hmax))
-        .select(col("hnode").as("node"),
-          round6(col("m") / col("mx")).as("h")))
-      free(hub)
-      hub = nextHub
+    val e = materialize(
+      (if (assumeDistinct) e0 else e0.distinct()).repartition(col("src"))).df
+    // one max-normalized propagation of `scores` from the `from` end of
+    // each edge to its `to` end
+    def spread(scores: DataFrame, from: String, to: String,
+        kind: String): DataFrame = {
+      val raw = e.join(scores, e(from) === scores("node"))
+        .groupBy(col(to).as("__n")).agg(sum(col("score")).as("m"))
+      raw.crossJoin(broadcast(raw.agg(max(col("m")).as("mx"))))
+        .select(col("__n").as("node"), lit(kind).as("kind"),
+          round6(col("m") / col("mx")).as("score"))
     }
-    hub.select(col("node"), lit("hub").as("kind"), col("h").as("score"))
-      .unionAll(auth.select(col("node"), lit("auth").as("kind"),
-        col("a").as("score")))
+    val hubs = e.select(col("src").as("node")).distinct()
+      .select(col("node"), lit("hub").as("kind"), lit(1.0).as("score"))
+    fixpoint("hits", hubs, iters, inputs = Seq(e)) { s =>
+      val auth = spread(s.filter(col("kind") === "hub"), "src", "dst", "auth")
+      spread(auth, "dst", "src", "hub").unionAll(auth)
+    }.df
   }
 }
 
 class CycleException(msg: String) extends RuntimeException(msg)
+
+/** A convergent [[GraphOps]] loop reached its round cap before
+  * converging (on a cyclic graph, say, for `topoDepth`). */
+class FixpointCapException(val loop: String, val rounds: Int)
+  extends IllegalStateException(s"$loop did not converge in $rounds rounds")

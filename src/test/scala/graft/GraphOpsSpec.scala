@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{CycleException, GraphOps}
+import org.apache.spark.ActionJobs
+import graft.graph.{CycleException, FixpointCapException, GraphOps}
 
 /** Ports of the reference's four unit tests
   * (`concepts/src/test_concept_csv_export.py:33-103`), which pin the
@@ -110,8 +111,8 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(GraphOps.kCorePeel(edges, k = 6, iters = 3).count() == 0L)
   }
 
-  test("connectedComponentsStar: path graph, stars, and parity with min-propagation") {
-    // a 12-node path: diameter 11, the case min-propagation pays 11
+  test("connectedComponentsStar: path graph, stars, and union-find parity") {
+    // a 12-node path: diameter 11, the case label propagation pays 11
     // rounds for and star contraction collapses in O(log)
     val path = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
     val got = GraphOps.connectedComponentsStar(path)
@@ -124,14 +125,57 @@ class GraphOpsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(gotMessy == Map(3L -> 3L, 4L -> 3L, 5L -> 3L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 40L -> 40L, 41L -> 40L))
-    // parity with the min-propagation implementation on a mixed graph
-    val mixed = ((0L until 30L).map(i => (i, i + 1)) ++
-      Seq((50L, 60L), (60L, 70L), (80L, 81L))).toDF("src", "dst")
-    val star = GraphOps.connectedComponentsStar(mixed)
+    // parity with the driver-side union-find on a mixed graph
+    val mixed = (0L until 30L).map(i => (i, i + 1)) ++
+      Seq((50L, 60L), (60L, 70L), (80L, 81L))
+    val star = GraphOps.connectedComponentsStar(mixed.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
-    val prop = GraphOps.connectedComponents(mixed.toDF("a", "b"))
-      .as[(Long, Long)].collect().toMap
-    assert(star == prop, "star contraction must agree with min-propagation")
+    assert(star == UnionFind.components(mixed),
+      "star contraction must agree with union-find")
+  }
+
+  test("fixpoint driver: one action job per round, observed convergence, named cap error") {
+    val sc = spark.sparkContext
+    // depth-k chain n_k -> ... -> n_0 (src references dst)
+    val k = 4
+    val chain = (1 to k).map(i => (s"n$i", s"n${i - 1}")).toDF("src", "dst")
+    // topoDepth: the edge set, the initial frame, then rounds 1..k
+    // raise depths and round k + 1 changes nothing and converges
+    val topoJobs = ActionJobs.count(sc) { GraphOps.topoDepth(chain) }
+    assert(topoJobs == k + 3, s"topoDepth ran $topoJobs action jobs")
+    // detectCycles: the edge set, the initial frame, then rounds 1..k
+    // peel one node each; round k + 1 peels the last node and round
+    // k + 2 finds the set unchanged, and both write the EMPTY set (a
+    // job over zero partitions, not an action job). The set's size is
+    // the last round's observed count, not a job of its own
+    val cycleJobs = ActionJobs.count(sc) { GraphOps.detectCycles(chain) }
+    assert(cycleJobs == k + 2, s"detectCycles ran $cycleJobs action jobs")
+    // planted pairs and small stars are already a star forest: the
+    // initial frame plus one round that finds the same signature — no
+    // signature job
+    val pairs = (1L to 20L).map(i => (i, i + 1000L)) ++
+      (2000L to 2005L).map(i => (1999L, i))
+    val ccJobs = ActionJobs.count(sc) {
+      GraphOps.connectedComponentsStar(pairs.toDF("a", "b"))
+    }
+    assert(ccJobs == 2, s"connectedComponentsStar ran $ccJobs action jobs")
+    // an empty graph: every convergence metric is observed on the
+    // empty frame (count 0), so the loops end instead of waiting
+    val empty = Seq.empty[(String, String)].toDF("src", "dst")
+    assert(GraphOps.topoDepth(empty).count() == 0L)
+    GraphOps.detectCycles(empty)
+    assert(GraphOps.bfsClosure(empty, Seq("a").toDF("node"))
+      .as[String].collect().toSeq == Seq("a"))
+    assert(GraphOps.connectedComponentsStar(
+      Seq.empty[(Long, Long)].toDF("a", "b")).count() == 0L)
+    // a cyclic graph never converges: the driver's named cap error
+    val cyclic = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    val e = intercept[FixpointCapException] {
+      GraphOps.topoDepth(cyclic, maxIter = 3)
+    }
+    assert(e.loop == "topoDepth" && e.rounds == 3)
+    assert(e.getMessage.contains("topoDepth") && e.getMessage.contains("3 rounds"),
+      e.getMessage)
   }
 
   test("hits: iters = 0 is rejected up front, not an NPE at union time") {

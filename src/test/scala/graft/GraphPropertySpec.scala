@@ -45,14 +45,27 @@ class GraphPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents: chains collapse to min-id groups; singletons separate") {
-    import org.apache.spark.sql.functions.col
-    // components: {1,2,3,9} (chain), {5,6}
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("a", "b")
-    val comps = GraphOps.connectedComponents(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(Seq(1L, 2L, 3L, 9L).forall(comps(_) == 1L))
-    assert(comps(5L) == 5L && comps(6L) == 5L)
+  test("connectedComponentsStar: random graphs match union-find") {
+    val rng = new scala.util.Random(23)
+    (1 to 3).foreach { _ =>
+      // ids drawn from a shuffled range, so paths and trees are not
+      // laid out in id order
+      val ids = rng.shuffle((1L to 400L).toVector).iterator
+      // a long path, a random tree, and a sparse random block (itself
+      // possibly several components)
+      val path = Vector.fill(40 + rng.nextInt(40))(ids.next())
+      val tree = Vector.fill(30)(ids.next())
+      val block = Vector.fill(40)(ids.next())
+      val base = path.zip(path.tail) ++
+        tree.indices.tail.map(i => (tree(rng.nextInt(i)), tree(i))) ++
+        Vector.fill(30)((block(rng.nextInt(40)), block(rng.nextInt(40))))
+      // duplicate and reversed copies, and a self-loop
+      val edges = base ++ base.take(10) ++ base.takeRight(10).map(_.swap) :+
+        (path.head, path.head)
+      val got = GraphOps.connectedComponentsStar(edges.toDF("a", "b"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == UnionFind.components(edges), s"edges: $edges")
+    }
   }
 
   test("pageRank: dangling mass leaks by default, is conserved with redistribution, and the flag is a no-op without dangling nodes") {
