@@ -13,6 +13,13 @@ import java.nio.file.{Files, Paths}
   * crashed query must never appear as a fast success.
   */
 object Bench {
+  /** The objects that declare shared stages ([[StageMemo.stage]]).
+    * Naming them initializes them, in this order, before any query
+    * does, so the registry order is the same in every run. */
+  private[graft] val stageOwners: Seq[AnyRef] = Seq(
+    graft.operators.PipelineQueries, graft.operators.CoreQueries,
+    graft.exports.ScaledOmrs)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -35,8 +42,7 @@ object Bench {
       // drop the warm-up pass's shared-stage checkpoints so they don't
       // pin executor storage through the timed pass (r5/r6 saw ~1 s
       // cross-query attribution noise from lingering blocks + GC)
-      graft.operators.PipelineQueries.clearSharedStages()
-      graft.operators.CoreQueries.clearSharedStages()
+      StageMemo.clear()
       System.gc()
     }
 
@@ -133,9 +139,11 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val shuffles = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
 
-    // STAGE-ATTRIBUTION pass (r14 verdict #2): force every shared-stage
-    // memo at the timed dir BEFORE the per-query loop, each timed as its
-    // own `stage:` pseudo-entry in the queries/metrics JSON. Without
+    // STAGE-ATTRIBUTION pass (r14 verdict #2): force every registered
+    // shared stage at the timed dir BEFORE the per-query loop, in
+    // registry order (a stage is declared after the stages it consumes,
+    // so each row bills only its own build), each timed as its own
+    // `stage:` pseudo-entry in the queries/metrics JSON. Without
     // this, a memoized corpus pass bills whichever consumer touches it
     // first, and sub-second scheduling jitter decides who that is —
     // r14's two same-HEAD runs flagged DISJOINT query sets at median
@@ -146,13 +154,12 @@ object Bench {
     val stageRows: Seq[(String, Double)] =
       if (sys.env.contains("SPARK_GRAFT_NO_STAGES")) Seq.empty
       else {
-        val builders = graft.operators.PipelineQueries.sharedStageBuilders ++
-          graft.operators.CoreQueries.sharedStageBuilders
-        builders.map { case (name, build) =>
+        StageMemo.stages.map { stage =>
+          val name = s"stage:${stage.name}"
           System.err.println(s"[bench] $name")
           val before = snapMetrics()
           val t0 = System.nanoTime()
-          try build(spark, sfDir)
+          try stage.force(spark, sfDir)
           catch { case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
               .takeWhile(_ != '\n').take(200)

@@ -88,8 +88,7 @@ object Scaling {
       queries.foreach { case (_, fn) =>
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
-      graft.operators.PipelineQueries.clearSharedStages()
-      graft.operators.CoreQueries.clearSharedStages()
+      StageMemo.clear()
       System.gc()
     }
 

@@ -46,12 +46,13 @@ object Verify {
     // driver-side planning bound (sequential it takes the same ~7 min
     // at 4 threads as at 16 — per-query Catalyst analysis dominates,
     // not executor compute), so a small pool of submitters overlaps
-    // planning with execution. Safe by construction: every shared
-    // stage memo in the engine is an atomic TrieMap keyed by
-    // (session, dir), session-conf tweaks happen on child sessions,
-    // and each query writes its own output dir. Submission is in
-    // sorted name order, so the reference-surface gates (q01…) land
-    // first if the run is ever cut short.
+    // planning with execution. Shared stages are built once however
+    // many submitters ask concurrently (StageMemo's build-once cell:
+    // later callers of a key wait for the first build), session-conf
+    // tweaks happen on child sessions, and each query writes its own
+    // output dir. Submission is in sorted name order, so the
+    // reference-surface gates (q01…) land first if the run is ever cut
+    // short.
     // Per-query progress record, appended AS EACH QUERY LANDS (flushed per
     // line): a driver run killed at minute N leaves N honest rows here —
     // the r11/r12 gates both recorded {} because nothing durable existed

@@ -277,8 +277,9 @@ object ConceptsExport {
   }
 
   /** stderr stage timing, on when GRAFT_EXPORT_TIMING is set — used to
-    * attribute the q470/stage:omrs_jdbc cost between pipeline stages. */
-  private def timed[A](what: String)(body: => A): A =
+    * attribute the q470/stage:omrs_jdbc cost between pipeline stages
+    * and the stage's ingest and baseline legs. */
+  private[exports] def timed[A](what: String)(body: => A): A =
     if (!sys.env.contains("GRAFT_EXPORT_TIMING")) body
     else {
       val t0 = System.nanoTime()

@@ -3,6 +3,7 @@ package graft.exports
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.StageMemo
 import graft.config.ConceptsConfig
 import graft.sources.{JdbcConfig, JdbcSource}
 import graft.sink.JdbcSink
@@ -171,123 +172,62 @@ object ScaledOmrs {
       "concept_answer" -> conceptAnswer)
   }
 
-  /** Derby ingest memo: one embedded database per (session, sf dir),
-    * loaded once — the scaled analogue of ExportsSpec's fixture DB,
-    * with the audit columns real OpenMRS tables carry (so column
-    * pruning is OBSERVABLE in the plan). Returns the JdbcConfig. */
-  private val dbStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), JdbcConfig]
-  private def derbyDb(s: SparkSession, dir: String, n: Long): JdbcConfig =
-    dbStage.getOrElseUpdate((s, dir), timed(s"derby ingest n=$n") {
-      // full-string md5, not abs(hashCode): hashCode collides across
-      // dirs (and abs(Int.MinValue) is negative) — r15 advisor
-      val dbName = "omrs" + java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-      val url = s"jdbc:derby:memory:$dbName"
-      val conn = java.sql.DriverManager.getConnection(url + ";create=true")
-      try {
-        val st = conn.createStatement()
-        val cfgJ = JdbcConfig(url, user = "", password = "")
-        import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-        tables(s, n).foreach { case (name, df) =>
-          val cols = df.schema.fields.map { f =>
-            val t = f.dataType match {
-              case LongType => "BIGINT"
-              case IntegerType => "INTEGER"
-              case DoubleType => "DOUBLE"
-              case _ => "VARCHAR(256)"
-            }
-            s"${f.name} $t"
-          }
-          val audit = Seq("creator BIGINT", "date_created VARCHAR(32)",
-            "changed_by BIGINT")
-          st.execute(s"CREATE TABLE $name (${(cols ++ audit).mkString(", ")})")
-          JdbcSink.write(df, cfgJ, name)
-        }
-        st.close()
-        cfgJ
-      } finally conn.close()
-    })
-
-  /** stderr stage-split instrumentation (attribution inside the
-    * stage:omrs_jdbc / q470 rows — ingest vs export legs). Gated on
-    * GRAFT_EXPORT_TIMING like ConceptsExport.timed (r16 advisor: the
-    * unconditional print was instrumentation noise in every
-    * bench/verify log and inconsistent between the two twins). */
-  private def timed[A](what: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_EXPORT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[omrs] $what%s took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  /** Direct-frame-ingress export memo: the comparison baseline CSV,
-    * written once per (session, dir) — the gate's timed body then pays
-    * the JDBC-ingress export (the path under test) plus the byte
-    * compare, not two full export pipelines. */
-  private val directCsvStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def directCsv(s: SparkSession, dir: String, n: Long,
-      cfg: ConceptsConfig): String =
-    directCsvStage.getOrElseUpdate((s, dir), timed(s"direct export n=$n") {
-      val out = tmpDir(s, dir).resolve("concepts_direct.csv").toString
-      val direct = tables(s, n)
-      ConceptsExport.export(direct(_), cfg, out)
-      out
-    })
-
-  /** ONE temp dir per (session, dir), recursively deleted by a JVM
-    * shutdown hook — repeated bench/verify passes previously leaked a
-    * fresh full-dictionary CSV directory per gate invocation (r15
-    * advisor), and `File.deleteOnExit` alone only removes EMPTY
-    * directories, so the CSVs written into the dir survived JVM exit
-    * (r16 advisor). The hook walks each memoized dir depth-first. */
-  private val tmpStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), java.nio.file.Path]
-  private lazy val tmpCleanup: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpStage.values.foreach { root =>
-        try {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-            _.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala
-              .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-                catch { case _: java.io.IOException => () })
-          }
-        } catch { case _: Throwable => () }
-      }))
-  private def tmpDir(s: SparkSession, dir: String): java.nio.file.Path =
-    tmpStage.getOrElseUpdate((s, dir), {
-      tmpCleanup
-      java.nio.file.Files.createTempDirectory("graft_omrs_scale_")
-    })
-
-  /** Bench stage hook (see PipelineQueries.sharedStageBuilders); the
-    * [[timed]] stderr lines inside the memos attribute the stage row's
-    * cost between the Derby ingest and the direct-export baseline. */
-  def buildDbStage(s: SparkSession, dir: String): Unit = {
+  /** The q470 stage per (session, sf dir): the dictionary ingested
+    * into an embedded in-memory Derby database, and the
+    * direct-frame-ingress export CSV (the comparison baseline, written
+    * once so the gate's timed body pays the JDBC-ingress export, the
+    * path under test, plus the byte compare, not two full export
+    * pipelines). The database is dropped with the entry. The
+    * [[ConceptsExport.timed]] stderr lines attribute the stage's cost
+    * between the ingest and the baseline export. */
+  private val omrsStage = StageMemo.stageWith[(JdbcConfig, String)]("omrs_jdbc",
+      release = st => StageMemo.dropDerby(st._1)) { (s, dir) =>
     val n = scaleFor(s, dir)
-    derbyDb(s, dir, n)
-    directCsv(s, dir, n, gateCfg)
-    ()
+    val cfg = ConceptsExport.timed(s"derby ingest n=$n")(derbyIngest(s, dir, n))
+    val out = tmpDir(s, dir).resolve("concepts_direct.csv").toString
+    ConceptsExport.timed(s"direct export n=$n") {
+      val direct = tables(s, n)
+      ConceptsExport.export(direct(_), gateCfg, out)
+    }
+    (cfg, out)
   }
+
+  /** Ingest the dictionary into one embedded database — the scaled
+    * analogue of ExportsSpec's fixture DB, with the audit columns real
+    * OpenMRS tables carry (so column pruning is OBSERVABLE in the
+    * plan). */
+  private def derbyIngest(s: SparkSession, dir: String, n: Long): JdbcConfig = {
+    val url = s"jdbc:derby:memory:omrs${StageMemo.dirSlug(dir)}"
+    val conn = java.sql.DriverManager.getConnection(url + ";create=true")
+    try {
+      val st = conn.createStatement()
+      val cfgJ = JdbcConfig(url, user = "", password = "")
+      import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+      tables(s, n).foreach { case (name, df) =>
+        val cols = df.schema.fields.map { f =>
+          val t = f.dataType match {
+            case LongType => "BIGINT"
+            case IntegerType => "INTEGER"
+            case DoubleType => "DOUBLE"
+            case _ => "VARCHAR(256)"
+          }
+          s"${f.name} $t"
+        }
+        val audit = Seq("creator BIGINT", "date_created VARCHAR(32)",
+          "changed_by BIGINT")
+        st.execute(s"CREATE TABLE $name (${(cols ++ audit).mkString(", ")})")
+        JdbcSink.write(df, cfgJ, name)
+      }
+      st.close()
+      cfgJ
+    } finally conn.close()
+  }
+
+  /** ONE temp dir per (session, dir) for the gate's CSVs. */
+  private def tmpDir(s: SparkSession, dir: String): java.nio.file.Path =
+    StageMemo.getOrBuild(s, dir, "omrs_tmp")(StageMemo.tempDir("graft_omrs_scale_"))
 
   private val gateCfg = ConceptsConfig(locales = Seq("en", "es"))
-
-  def clearSharedStages(): Unit = {
-    // DROP the in-memory Derby databases, not just the memo: Derby
-    // memory DBs outlive the connection, so a cleared memo re-running
-    // CREATE TABLE against the still-alive database would hard-fail
-    // (r15 advisor). ';drop=true' "succeeds" via SQLException 08006.
-    dbStage.values.foreach { cfg =>
-      try java.sql.DriverManager.getConnection(cfg.url + ";drop=true")
-      catch { case _: java.sql.SQLException => () }
-    }
-    dbStage.clear(); directCsvStage.clear()
-  }
 
   /** One concept per document row of the sf dir. */
   private def scaleFor(s: SparkSession, dir: String): Long =
@@ -299,7 +239,7 @@ object ScaledOmrs {
     import s.implicits._
     val n = scaleFor(s, dir)
     val cfg = gateCfg
-    val jdbcCfg = derbyDb(s, dir, n)
+    val (jdbcCfg, outD) = omrsStage(s, dir)
     val jdbcResolver = JdbcSource.resolver(s, jdbcCfg)
 
     // plan gate at scale: filters pushed into the JDBC scans, audit
@@ -314,9 +254,10 @@ object ScaledOmrs {
       "audit columns leaked into a JDBC scan — column pruning lost")
 
     val outJ = tmpDir(s, dir).resolve("concepts_jdbc.csv").toString
-    val outD = directCsv(s, dir, n, cfg)
     val t0 = System.nanoTime()
-    timed(s"jdbc export n=$n") { ConceptsExport.export(jdbcResolver, cfg, outJ) }
+    ConceptsExport.timed(s"jdbc export n=$n") {
+      ConceptsExport.export(jdbcResolver, cfg, outJ)
+    }
     val jdbcSec = (System.nanoTime() - t0) / 1e9
     val bj = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(outJ))
     val bd = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(outD))

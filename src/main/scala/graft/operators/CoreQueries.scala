@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.StageMemo
 import graft.sources.Tables
 import graft.functions.{MysqlFunctions => M}
 import graft.functions.{TextFunctions => T}
@@ -676,23 +677,20 @@ object CoreQueries {
     * persisted bucketed+sorted on the order key ONCE (the nightly
     * table-layout decision), so every later join on that key plans
     * with ZERO join-side exchanges. The memo holds table names only. */
-  private val bucketStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketStage.getOrElseUpdate((s, dir), {
-      val suf = java.lang.Integer.toHexString(dir.hashCode)
-      val lt = s"graft_li_$suf"
-      val ot = s"graft_ord_$suf"
-      graft.sources.Bucketing.writeBucketed(
-        Tables.lineitem(s, dir)
-          .select("l_orderkey", "l_linenumber", "l_quantity"),
-        lt, "l_orderkey", buckets = 8)
-      graft.sources.Bucketing.writeBucketed(
-        Tables.orders(s, dir)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice"),
-        ot, "o_orderkey", buckets = 8)
-      (lt, ot)
-    })
+  private val bucketedTables = StageMemo.stage("bucketed_tables") { (s, dir) =>
+    val suf = StageMemo.dirSlug(dir)
+    val lt = s"graft_li_$suf"
+    val ot = s"graft_ord_$suf"
+    graft.sources.Bucketing.writeBucketed(
+      Tables.lineitem(s, dir)
+        .select("l_orderkey", "l_linenumber", "l_quantity"),
+      lt, "l_orderkey", buckets = 8)
+    graft.sources.Bucketing.writeBucketed(
+      Tables.orders(s, dir)
+        .select("o_orderkey", "o_orderstatus", "o_totalprice"),
+      ot, "o_orderkey", buckets = 8)
+    (lt, ot)
+  }
 
   /** q397's JDBC stage per (session, sf dir): customer + nation loaded
     * ONCE into an embedded in-memory Derby database through the
@@ -702,28 +700,25 @@ object CoreQueries {
     * scale — every other gate scans parquet, which left S1's
     * production path validated only by unit-scale round-trip tests
     * (VERDICT r10's one soft gap). The memo holds the JDBC config
-    * only; the database lives for the JVM (in-memory Derby). */
-  private val derbyStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.sources.JdbcConfig]
-  private def derbyTables(s: SparkSession, dir: String): graft.sources.JdbcConfig =
-    derbyStage.getOrElseUpdate((s, dir), {
-      val db = "graftgate" + java.lang.Integer.toHexString(dir.hashCode)
-      val url = s"jdbc:derby:memory:$db"
-      val conn = java.sql.DriverManager.getConnection(url + ";create=true")
-      try {
-        val st = conn.createStatement()
-        st.execute("CREATE TABLE customer (c_custkey BIGINT, " +
-          "c_nationkey INT, c_acctbal DOUBLE)")
-        st.execute("CREATE TABLE nation (n_nationkey INT, n_name VARCHAR(32))")
-        st.close()
-      } finally conn.close()
-      val cfg = graft.sources.JdbcConfig(url, user = "", password = "")
-      graft.sink.JdbcSink.write(Tables.load(s, dir, "customer")
-        .select("c_custkey", "c_nationkey", "c_acctbal"), cfg, "customer")
-      graft.sink.JdbcSink.write(Tables.load(s, dir, "nation")
-        .select("n_nationkey", "n_name"), cfg, "nation")
-      cfg
-    })
+    * only; the in-memory database is dropped with the entry. */
+  private val derbyTables = StageMemo.stageWith[graft.sources.JdbcConfig](
+      "derby_tables", release = StageMemo.dropDerby) { (s, dir) =>
+    val url = s"jdbc:derby:memory:graftgate${StageMemo.dirSlug(dir)}"
+    val conn = java.sql.DriverManager.getConnection(url + ";create=true")
+    try {
+      val st = conn.createStatement()
+      st.execute("CREATE TABLE customer (c_custkey BIGINT, " +
+        "c_nationkey INT, c_acctbal DOUBLE)")
+      st.execute("CREATE TABLE nation (n_nationkey INT, n_name VARCHAR(32))")
+      st.close()
+    } finally conn.close()
+    val cfg = graft.sources.JdbcConfig(url, user = "", password = "")
+    graft.sink.JdbcSink.write(Tables.load(s, dir, "customer")
+      .select("c_custkey", "c_nationkey", "c_acctbal"), cfg, "customer")
+    graft.sink.JdbcSink.write(Tables.load(s, dir, "nation")
+      .select("n_nationkey", "n_name"), cfg, "nation")
+    cfg
+  }
 
   // q397: the S1 PRODUCTION ingress at gate scale — q03's join-agg
   // shape where both inputs arrive through JdbcSource against the
@@ -948,23 +943,13 @@ object CoreQueries {
       .orderBy("l_orderkey", "l_linenumber")
 
   /** Shared sessionization stage per (session, sf dir): q54 reports it,
-    * q94 sweeps it — one keyed sort + aggregate instead of two (the
-    * PipelineQueries shared-stage memo contract: immutable sf dirs,
-    * no staleness check). */
-  private val sessionStage =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sessionsShared(s: SparkSession, dir: String): DataFrame =
-    sessionStage.getOrElseUpdate((s, dir),
-      sessionizePipeline(s, dir).localCheckpoint())
+    * q94 sweeps it — one keyed sort + aggregate instead of two. */
+  private val sessionsShared = StageMemo.stage("sessions") { (s, dir) =>
+    sessionizePipeline(s, dir).localCheckpoint()
+  }
 
-  /** Drop the shared-stage memo (Bench warm-up hygiene — see
-    * [[graft.operators.PipelineQueries.clearSharedStages]]). */
-  def clearSharedStages(): Unit = sessionStage.clear()
-
-  /** Named stage builder for the bench's stage-attribution rows (see
-    * [[graft.operators.PipelineQueries.sharedStageBuilders]]). */
-  def sharedStageBuilders: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "stage:sessions" -> ((s, d) => { sessionsShared(s, d).count(); () }))
+  /** Drop every shared-stage memo entry: forwards to [[StageMemo.clear]]. */
+  def clearSharedStages(): Unit = StageMemo.clear()
 
   // Concurrency timeline over the q54 sessions: +1/-1 boundary sweep,
   // global running count via the two-level prefix sum (no
@@ -4166,11 +4151,7 @@ object CoreQueries {
     * fit-once/score-many contract (q137-q139, q446): q460 publishes
     * the parameters, q463 scores the stream against them without
     * refitting. Returns (mu1, sg1, pi1, mu2, sg2, lastN1, n). */
-  private val gmmStage = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Double, Double, Double, Double, Double, Double, Long)]
-  private def gmmFit(s: SparkSession, dir: String):
-      (Double, Double, Double, Double, Double, Double, Long) =
-    gmmStage.getOrElseUpdate((s, dir), gmmFitImpl(s, dir))
+  private val gmmFit = StageMemo.stage("gmm_fit")(gmmFitImpl)
 
   def gmmEm(s: SparkSession, dir: String): DataFrame = {
     val (mu1, sg1, pi1, mu2, sg2, lastN1, n) = gmmFit(s, dir)

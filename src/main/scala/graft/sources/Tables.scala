@@ -26,24 +26,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // CONTRACT (r16 advisor): a dir must be immutable for the lifetime of
-  // any session that has loaded from it — the memoized relation pins the
-  // file listing and footer schema, so regenerating testdata under a
-  // memoized dir inside a live session would yield missing-file errors
-  // or silently stale rows. Every flow here is write-THEN-first-load
-  // (GenScale writes before anything reads), so the contract holds.
-  // Entries of STOPPED sessions are evicted on the next load so the map
-  // never pins dead SparkSessions/FileIndexes for JVM life.
-  private val relCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  // The relations follow the graft.StageMemo contract (immutable dirs:
+  // a memoized relation pins the file listing and footer schema) in an
+  // instance of their own, which StageMemo.clear() leaves alone.
+  private val relations = new graft.StageMemo
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    relCache.keysIterator
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(relCache.remove)
-    relCache.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    relations.getOrBuild(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** events.parquet has shipped `ts` in three different parquet encodings
     * across testdata regenerations; normalize all of them here so every
